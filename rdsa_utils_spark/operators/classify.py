@@ -14,6 +14,7 @@ engine replays the whole train→predict pipeline bit-for-bit (see the
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -515,8 +516,6 @@ def train_logreg_hashed(
     # is rounded like every other weight, so replay stays bit-exact.
     n_pos = int(stats["np"] or 0)
     if 0 < n_pos < n:
-        import math
-
         b0 = _round_half_up(math.log(n_pos / float(n - n_pos)), weight_round)
     else:
         b0 = 0.0  # degenerate single-class frame: sigmoid(0) start
@@ -878,6 +877,22 @@ def logreg_score_expr(
     )
 
 
+#: Most distinct ``(score, label)`` groups :func:`platt_scale_train`
+#: fits on the driver from one capped collect (the ``bt_ratings``
+#: driver bound); above it each iteration is one Spark aggregation.
+_PLATT_DRIVER_GROUPS = 65536
+
+
+def _sigmoid(z: float) -> float:
+    """``1 / (1 + exp(-z))`` with Spark's overflow behaviour: where
+    ``exp`` overflows, Spark's double arithmetic gives ``1/(1+inf) =
+    0.0`` while Python's ``math.exp`` raises."""
+    try:
+        return 1.0 / (1.0 + math.exp(-z))
+    except OverflowError:
+        return 0.0
+
+
 def platt_scale_train(
     df: DataFrame,
     score_col: str,
@@ -902,33 +917,49 @@ def platt_scale_train(
     fixed-iteration ANSI-SQL unroll replays the training bit-for-bit
     (same device as the logreg/PageRank oracles).
 
-    100 TB posture: per iteration ONE map-side-combined aggregation
-    over the (score, label) projection — two partial sums per map
-    task; the only driver state is the two scalars themselves (the
-    bounded-driver-state device used by IVF's k-row centroid collect).
-    The projection is pinned with a localCheckpoint so the input
-    lineage runs once, not once per iteration. Labels must be 0/1;
-    NULL scores/labels are excluded.
+    100 TB posture: the gradient depends on the data only through the
+    binomial counts of each distinct ``(score, label)`` pair, so ONE
+    map-side-combined aggregation reduces the input to ``(s, y, w)``
+    groups and the gradients are the weighted sums ``Σ w·(p−y)·s`` and
+    ``Σ w·(p−y)``. Up to ``_PLATT_DRIVER_GROUPS`` groups (a bounded
+    score vocabulary: quantized margins, discounts, bucketed model
+    outputs) are fetched by one capped collect and every step runs on
+    the driver, with ``math.fsum`` so the sums do not depend on
+    partitioning or collect order — the input is read once and no job
+    runs per iteration. Continuous scores over the cap take one
+    aggregation per iteration over the pinned grouped frame; the only
+    driver state there is the two scalars. Labels must be 0/1; NULL
+    scores/labels are excluded.
     """
-    import math
-
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if lr <= 0:
         raise ValueError(f"lr must be > 0, got {lr}")
-    base = (
+    grouped = (
         df.select(
             F.col(score_col).cast("double").alias("__s"),
             F.col(label_col).cast("double").alias("__y"),
         )
         .filter(F.col("__s").isNotNull() & F.col("__y").isNotNull())
-        .localCheckpoint(eager=False)
+        .groupBy("__s", "__y")
+        .agg(F.count(F.lit(1)).alias("__w"))
     )
-    first = base.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("__y").alias("np"),
-    ).first()
-    n, n_pos = first["n"], first["np"]
-    if n == 0:
+    stats = [
+        (r["__s"], r["__y"], r["__w"])
+        for r in grouped.limit(_PLATT_DRIVER_GROUPS + 1).collect()
+    ]
+    on_driver = len(stats) <= _PLATT_DRIVER_GROUPS
+    if on_driver:
+        n = sum(w for _, _, w in stats)
+        n_pos = math.fsum(w * y for _, y, w in stats)
+    else:
+        grouped = grouped.localCheckpoint(eager=False)
+        first = grouped.agg(
+            F.sum("__w").alias("n"),
+            F.sum(F.col("__w") * F.col("__y")).alias("np"),
+        ).first()
+        n, n_pos = first["n"], first["np"]
+    if not n:
         raise ValueError("platt_scale_train: empty training frame")
     n_pos = int(n_pos)
     a = 0.0
@@ -938,15 +969,21 @@ def platt_scale_train(
         else 0.0
     )
     for _ in range(iterations):
-        p = F.lit(1.0) / (
-            F.lit(1.0) + F.exp(-(F.lit(a) * F.col("__s") + F.lit(b)))
-        )
-        g = base.agg(
-            F.sum((p - F.col("__y")) * F.col("__s")).alias("ga"),
-            F.sum(p - F.col("__y")).alias("gb"),
-        ).first()
-        a = _round_half_up(a - lr * (g["ga"] / n), param_round)
-        b = _round_half_up(b - lr * (g["gb"] / n), param_round)
+        if on_driver:
+            resid = [(w * (_sigmoid(a * s + b) - y), s) for s, y, w in stats]
+            ga = math.fsum(r * s for r, s in resid)
+            gb = math.fsum(r for r, _ in resid)
+        else:
+            p = F.lit(1.0) / (
+                F.lit(1.0) + F.exp(-(F.lit(a) * F.col("__s") + F.lit(b)))
+            )
+            r = F.col("__w") * (p - F.col("__y"))
+            g = grouped.agg(
+                F.sum(r * F.col("__s")).alias("ga"), F.sum(r).alias("gb"),
+            ).first()
+            ga, gb = g["ga"], g["gb"]
+        a = _round_half_up(a - lr * (ga / n), param_round)
+        b = _round_half_up(b - lr * (gb / n), param_round)
     return a, b
 
 

@@ -251,14 +251,18 @@ def bt_ratings(
     # term_round <= 12 keeps the distributed path's decimal(38,12)
     # casts exact identities of the rounded terms, which is what makes
     # the collected replay bit-equal; a wider term_round falls back to
-    # the distributed rounds.
-    if max_driver_pairs and term_round <= 12 and (
-        games.limit(max_driver_pairs + 1).count() <= max_driver_pairs
-    ):
+    # the distributed rounds. One capped collect doubles as the size
+    # probe.
+    game_rows = (
+        games.limit(max_driver_pairs + 1).collect()
+        if max_driver_pairs and term_round <= 12
+        else None
+    )
+    if game_rows is not None and len(game_rows) <= max_driver_pairs:
         return _bt_ratings_rows(
             df.sparkSession,
             items.schema["__i"].dataType,
-            games.collect(),
+            game_rows,
             items.collect(),
             iterations=iterations,
             rating_round=rating_round,

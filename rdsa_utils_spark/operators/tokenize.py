@@ -152,9 +152,10 @@ def bpe_train(
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     vocab = _word_vocab(df, text_col, words).localCheckpoint(eager=False)
     if max_driver_vocab:
-        # cheap: vocab is the post-aggregation dictionary frame
-        if vocab.limit(max_driver_vocab + 1).count() <= max_driver_vocab:
-            rows = vocab.select("cnt", "syms").collect()
+        # cheap: vocab is the post-aggregation dictionary frame; one
+        # capped collect doubles as the size probe
+        rows = vocab.select("cnt", "syms").limit(max_driver_vocab + 1).collect()
+        if len(rows) <= max_driver_vocab:
             return _bpe_train_rows(
                 [(int(r["cnt"]), list(r["syms"])) for r in rows], num_merges,
             )

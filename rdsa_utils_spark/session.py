@@ -68,6 +68,49 @@ _COMMON_CONFIGS: dict[str, str] = {
 }
 
 
+#: Container memory limits, cgroup v2 then v1. A missing file or the
+#: v2 value ``max`` means no limit; v1 reports "no limit" as a huge
+#: number, which the minimum with physical RAM absorbs.
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _machine_memory_bytes() -> Optional[int]:
+    """The memory this process may use: the lesser of physical RAM
+    and the cgroup limit, since inside a container ``sysconf`` reports
+    the HOST's RAM. ``None`` when neither can be read."""
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (ValueError, OSError, AttributeError):
+        pass
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    return min(limits) if limits else None
+
+
+def _local_driver_memory() -> Optional[str]:
+    """The local profile's ``spark.driver.memory``:
+    ``SPARK_LOCAL_DRIVER_MEM`` when set, else a quarter of
+    :func:`_machine_memory_bytes` capped at 8g (at least 1g), else
+    ``None`` (Spark's default)."""
+    override = os.environ.get("SPARK_LOCAL_DRIVER_MEM")
+    if override:
+        return override
+    mem = _machine_memory_bytes()
+    if mem is None:
+        return None
+    return f"{max(1, min(8, mem // (4 * 1024**3)))}g"
+
+
 def create_spark_session(
     app_name: str = "rdsa_utils_spark",
     size: Optional[str] = None,
@@ -85,8 +128,10 @@ def create_spark_session(
         ``None``. ``local`` (and ``None`` when no master is configured
         in the environment) builds a ``local[*]`` session sized for a
         single machine: shuffle partitions = CPU count, driver memory
-        from ``SPARK_LOCAL_DRIVER_MEM`` (default unset → Spark
-        default). Cluster presets mirror reference sizing.
+        from ``SPARK_LOCAL_DRIVER_MEM``, else a quarter of the
+        machine's memory capped at 8g (see
+        :func:`_local_driver_memory`). Cluster presets mirror
+        reference sizing.
     extra_configs
         Applied last — callers can override anything.
     enable_hive
@@ -118,15 +163,10 @@ def create_spark_session(
         # query it ran. At 1g the JVM is GC-bound (measured: the full
         # 250-query bench dropped 30% wall-clock, with per-stage
         # summed task time down up to 20x, when the heap was raised).
-        # Default to a machine-derived size — a quarter of physical
-        # RAM capped at 8g — overridable via SPARK_LOCAL_DRIVER_MEM.
-        driver_mem = os.environ.get("SPARK_LOCAL_DRIVER_MEM")
-        if not driver_mem:
-            try:
-                phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-                driver_mem = f"{max(1, min(8, phys // (4 * 1024**3)))}g"
-            except (ValueError, OSError, AttributeError):
-                driver_mem = None
+        # Default to a machine-derived size — a quarter of the
+        # machine's memory capped at 8g — overridable via
+        # SPARK_LOCAL_DRIVER_MEM.
+        driver_mem = _local_driver_memory()
         if driver_mem:
             builder = builder.config("spark.driver.memory", driver_mem)
 

@@ -37,7 +37,8 @@ import re
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "_manifest.json"
 _VDIR_RE = re.compile(r"^v(\d{5})$")
@@ -96,8 +97,9 @@ def write_snapshot(
     The parquet write completes before the manifest moves, so a crash
     mid-write leaves the previous version live and an orphan directory
     behind (see module docstring). ``n_rows`` is recorded in the
-    manifest from the written files, making the manifest double as a
-    cheap row-count audit trail.
+    manifest from an observed count on the write itself (no second
+    job reads the files back), making the manifest double as a cheap
+    row-count audit trail.
     """
     client = client or _default_client()
     client.create_folder(root)
@@ -117,11 +119,21 @@ def write_snapshot(
         max(on_disk, default=0),
     ) + 1
     data_dir = f"{root}/{_dir_name(version)}"
-    writer = df.write.mode("error")
+    written = Observation()
+    observed = df.observe(written, F.count(F.lit(1)).alias("n"))
+    writer = observed.write.mode("error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)
-    n_rows = df.sparkSession.read.parquet(data_dir).count()
+    n_rows = written.get["n"]
+    if n_rows == 0 and partition_by:
+        # A partitioned write of no rows leaves no data file, so the
+        # version could never be read back: keep ``current`` where it
+        # is and leave the directory to vacuum, like a crashed write.
+        raise ValueError(
+            f"write_snapshot: empty frame with partition_by={partition_by} "
+            "writes no parquet file; the snapshot would be unreadable",
+        )
     manifest["versions"].append(
         {
             "version": version,

@@ -308,6 +308,48 @@ class TestVersionedSnapshots:
         with pytest.raises(FileNotFoundError):
             read_snapshot(spark, str(tmp_path / "nothing"))
 
+    @pytest.mark.parametrize("case", ["plain", "partitioned", "empty"])
+    def test_n_rows_is_the_written_row_count(self, spark, tmp_path, case):
+        # n_rows comes from an observed count on the write itself, not
+        # from reading the files back.
+        from rdsa_utils_spark.sources.versioned import (
+            snapshot_history,
+            write_snapshot,
+        )
+
+        df = spark.range(0, 37).select(
+            F.col("id"), (F.col("id") % 3).alias("part"),
+        )
+        if case == "empty":
+            df = df.filter(F.col("id") < 0)
+        root = str(tmp_path / case)
+        write_snapshot(
+            df, root,
+            partition_by=["part"] if case == "partitioned" else None,
+        )
+        assert snapshot_history(root)[0]["n_rows"] == (
+            0 if case == "empty" else 37
+        )
+
+    def test_empty_partitioned_snapshot_is_refused(self, spark, tmp_path):
+        # No rows under partition_by means no data file, which no reader
+        # could open: the write must fail before the manifest moves.
+        from rdsa_utils_spark.sources.versioned import (
+            snapshot_history,
+            write_snapshot,
+        )
+
+        df = spark.range(0, 4).select(
+            F.col("id"), (F.col("id") % 2).alias("part"),
+        )
+        root = str(tmp_path / "ds")
+        write_snapshot(df, root, partition_by=["part"])
+        with pytest.raises(ValueError, match="empty frame"):
+            write_snapshot(
+                df.filter(F.col("id") < 0), root, partition_by=["part"],
+            )
+        assert [h["n_rows"] for h in snapshot_history(root)] == [4]
+
     def test_rollback_then_new_write_continues_numbering(self, spark, tmp_path):
         from rdsa_utils_spark.sources.versioned import (
             read_snapshot,

@@ -58,12 +58,47 @@ def test_env_quantum_override(spark, monkeypatch):
     assert out.rdd.getNumPartitions() == _cores(spark)
 
 
+@pytest.mark.parametrize("value", ["abc", "0"])
+def test_bad_env_quantum_falls_back_to_default(spark, monkeypatch, value):
+    # A non-numeric or non-positive quantum must neither raise nor
+    # divide by zero: the default applies, exactly as if unset.
+    df = spark.range(0, 1000, 1, 1)
+    monkeypatch.delenv("SPARK_GRAFT_SPREAD_TASK_BYTES", raising=False)
+    want = ensure_parallelism(df, keys=["id"]).rdd.getNumPartitions()
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", value)
+    out = ensure_parallelism(df, keys=["id"])
+    assert out.rdd.getNumPartitions() == want
+
+
 def test_local_session_heap_is_machine_derived(spark):
     # The local profile must not run on Spark's 1g default: the heap
-    # defaults to min(8g, physical RAM / 4), overridable via
-    # SPARK_LOCAL_DRIVER_MEM (see session.py; guide §5).
-    if os.environ.get("SPARK_LOCAL_DRIVER_MEM"):
-        pytest.skip("explicit SPARK_LOCAL_DRIVER_MEM override in env")
+    # is SPARK_LOCAL_DRIVER_MEM, else min(8g, machine memory / 4) (see
+    # session.py; guide §5). Only a session this process built through
+    # the local profile carries that value.
+    from rdsa_utils_spark.session import _local_driver_memory
+
+    if (
+        os.environ.get("PYSPARK_GATEWAY_PORT")
+        or spark.sparkContext.appName != "rdsa-utils-spark-tests"
+    ):
+        pytest.skip("session not built in-process by the local profile")
+    assert spark.conf.get("spark.driver.memory") == _local_driver_memory()
+
+
+@pytest.mark.parametrize("limit", [None, "max", str(6 * 1024 ** 3)])
+def test_local_heap_honours_cgroup_limit(tmp_path, monkeypatch, limit):
+    # Inside a container sysconf reports the host's RAM; the cgroup
+    # limit, when lower, sizes the heap. An absent file or "max" is no
+    # limit.
+    from rdsa_utils_spark import session
+
+    monkeypatch.delenv("SPARK_LOCAL_DRIVER_MEM", raising=False)
+    path = tmp_path / "memory.max"
+    if limit is not None:
+        path.write_text(limit + "\n")
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_LIMITS", (str(path),))
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    expected = f"{max(1, min(8, phys // (4 * 1024 ** 3)))}g"
-    assert spark.conf.get("spark.driver.memory") == expected
+    mem = phys if limit in (None, "max") else min(phys, int(limit))
+    assert session._local_driver_memory() == (
+        f"{max(1, min(8, mem // (4 * 1024 ** 3)))}g"
+    )

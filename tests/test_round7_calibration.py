@@ -91,6 +91,77 @@ def test_platt_single_class_starts_at_zero_bias(spark):
     assert math.isfinite(a) and math.isfinite(b)
 
 
+def _platt_loss(rows, a, b):
+    """Mean log-loss of sigmoid(a*s + b) over (s, y) rows."""
+    total = 0.0
+    for s, y in rows:
+        p = 1.0 / (1.0 + math.exp(-(a * s + b)))
+        total -= y * math.log(p) + (1.0 - y) * math.log(1.0 - p)
+    return total / len(rows)
+
+
+def test_platt_spark_loop_matches_driver_path(spark, monkeypatch):
+    """The two fits run the same weighted sums over the grouped
+    (score, label) counts: a cap of 0 forces every iteration into a
+    Spark aggregation and must land on the identical parameters."""
+    from rdsa_utils_spark.operators import classify
+
+    df = _sep_frame(spark)
+    driver = platt_scale_train(df, "s", "y", iterations=20, lr=0.5)
+    monkeypatch.setattr(classify, "_PLATT_DRIVER_GROUPS", 0)
+    assert platt_scale_train(df, "s", "y", iterations=20, lr=0.5) == driver
+
+
+def test_platt_continuous_scores_over_cap_converge(spark, monkeypatch):
+    """More distinct scores than the cap take the Spark loop (the one
+    path that pins), and gradient descent still converges."""
+    from rdsa_utils_spark.operators import classify
+
+    # 400 distinct scores; the positive rate rises with the score
+    rows = [(i / 100.0, 1.0 if i % 10 < i // 40 else 0.0) for i in range(400)]
+    df = spark.createDataFrame(rows, "s double, y double")
+    pins = []
+    real = type(df).localCheckpoint
+    monkeypatch.setattr(
+        type(df), "localCheckpoint",
+        lambda self, *a, **k: pins.append(1) or real(self, *a, **k),
+    )
+    monkeypatch.setattr(classify, "_PLATT_DRIVER_GROUPS", 16)
+    a, b = platt_scale_train(df, "s", "y", iterations=40, lr=1.0)
+    assert pins == [1]
+    n_pos = sum(y for _, y in rows)
+    b0 = math.log(n_pos / (len(rows) - n_pos))
+    assert a > 0
+    assert _platt_loss(rows, a, b) < _platt_loss(rows, 0.0, b0) - 0.05
+    # the driver path over the same counts agrees
+    monkeypatch.setattr(classify, "_PLATT_DRIVER_GROUPS", 65536)
+    da, db = platt_scale_train(df, "s", "y", iterations=40, lr=1.0)
+    assert abs(a - da) < 1e-6 and abs(b - db) < 1e-6
+
+
+def test_platt_driver_path_jobs_do_not_grow_with_iterations(
+    spark, monkeypatch,
+):
+    """Under the cap the fit is one capped collect: the same Spark jobs
+    for 1 or 20 iterations, and no pin."""
+    df = _sep_frame(spark)
+    monkeypatch.setattr(
+        type(df), "localCheckpoint",
+        lambda self, *a, **k: pytest.fail("driver path pinned a frame"),
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for iters in (1, 20):
+            group = f"platt-jobs-{iters}"
+            sc.setJobGroup(group, group)
+            platt_scale_train(df, "s", "y", iterations=iters, lr=0.5)
+            jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[1] == jobs[20] > 0
+
+
 def test_platt_score_expr_matches_formula(spark):
     df = spark.createDataFrame([(2.0,), (0.0,)], "s double")
     got = df.select(platt_score_expr("s", 1.5, -1.0).alias("p")).collect()
